@@ -66,7 +66,9 @@ for t, k in [("lineitem", "l_orderkey"), ("orders", "o_orderkey"),
              ("embeddings", "vec_id"), ("events", "event_id"),
              ("part", "p_partkey"), ("supplier", "s_suppkey")]:
     MAXK[t] = con.sql(f"SELECT max({k}) + 1 FROM {src(t)}").fetchone()[0]
-print("strides:", MAXK)
+USER_STRIDE = con.sql(
+    f"SELECT max(user_id) + 1 FROM {src('events')}").fetchone()[0]
+print("strides:", MAXK, "events.user_id:", USER_STRIDE)
 
 write("lineitem", replicate(
     "lineitem", {"l_orderkey": MAXK["lineitem"]},
@@ -118,7 +120,7 @@ write("embeddings", " UNION ALL ".join(emb_parts),
       row_group_size=2_000_000)
 
 write("events", replicate(
-    "events", {"event_id": MAXK["events"], "user_id": 100_000},
+    "events", {"event_id": MAXK["events"], "user_id": USER_STRIDE},
     select=("@event_id AS event_id, ts, @user_id AS user_id, "
             "event_type, value, props")),
     row_group_size=2_000_000)

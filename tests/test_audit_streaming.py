@@ -229,3 +229,72 @@ def test_conv_rules_reject_custom_partitioning(spark, tmpdir):
         AuditedValidationRun(
             _engine(), tmpdir, partition_expr=F.lit("x"),
             conv_agg_rules=[("c", F.count("*") <= 1)])
+
+
+def test_job_summary_counts_each_group_once(spark, tmpdir, capsys):
+    """A crash between a batch's audit append and its marker write
+    re-runs the batch, which appends a second audit row for the group;
+    the job summary still counts every group and row once."""
+    import json
+    import os
+
+    from validify_spark import job
+
+    argv = ["--out", tmpdir, "--gen-rows", "2000", "--buckets", "4",
+            "--checks", "none", "--run-ts", "2026-01-01T00:00:00"]
+    assert job.main(argv) == 0
+    first = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (first["rows"], first["groups"]) == (2000, 4)
+
+    os.remove(os.path.join(tmpdir, "markers", "run1", "0.json"))
+    assert job.main(argv) == 0
+    again = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert again["partitions_validated_this_run"] == 1
+    assert len(read_audit_log(spark, tmpdir).collect()) == 5
+    n_rows = spark.read.parquet(
+        os.path.join(tmpdir, "input_turns_2000")).count()
+    assert (again["rows"], again["groups"]) == (n_rows, 4)
+    for k in ("violations", "groups_passed", "partitions_total"):
+        assert again[k] == first[k], k
+
+
+def test_stream_ordering_out_of_range_and_null_ts(spark, tmpdir):
+    """Timestamps outside pandas' nanosecond range (year 2600, as
+    generate_turns emits, and year 1600) and NULL timestamps: the
+    single-batch stateful output equals the batch check row for row,
+    down to a 1 µs step backwards at year 2600 (beyond float64's exact
+    integers, 2^53 µs)."""
+    import datetime as dt
+
+    from validify_spark.checks import ordering_violations
+    from validify_spark.streaming import stream_ordering_violations
+
+    far = dt.datetime(2600, 1, 1)
+    us = dt.timedelta(microseconds=1)
+    rows = [("c1", 1, far + 2 * us), ("c1", 2, far + us),
+            ("c1", 3, None), ("c1", 4, far + 3 * us),
+            ("c2", 1, None), ("c2", 1, dt.datetime(2024, 1, 1)),
+            ("c2", 3, dt.datetime(2600, 6, 1)),
+            ("c3", 1, dt.datetime(1600, 1, 1)),
+            ("c3", 2, dt.datetime(1599, 12, 31)),
+            ("c3", 3, None), ("c3", 3, None)]
+    df = spark.createDataFrame(rows,
+                               "conv_id string, turn_idx int, ts timestamp")
+    src = f"{tmpdir}/far_src"
+    df.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    q = (stream_ordering_violations(stream)
+         .writeStream.format("memory").queryName("ord_far")
+         .option("checkpointLocation", f"{tmpdir}/far_ckpt")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+    def key(r):
+        return (r["conv_id"], r["turn_idx"], r["code"])
+
+    got = sorted(map(key, spark.sql("SELECT * FROM ord_far").collect()))
+    want = sorted(map(key, ordering_violations(df).collect()))
+    assert got == want
+    assert ("c1", 2, "ts_out_of_order") in want
+    assert ("c3", 2, "ts_out_of_order") in want

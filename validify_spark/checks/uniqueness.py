@@ -26,6 +26,3 @@ def uniqueness_violations(df: DataFrame, keys: Sequence[str],
            .filter(F.col("dup_count") > 1))
     return out
 
-
-def assert_unique(df: DataFrame, keys: Sequence[str]) -> bool:
-    return uniqueness_violations(df, keys).isEmpty()

@@ -14,7 +14,6 @@ on NULL — compiled as ``c.isNull() | pred``.
 from __future__ import annotations
 
 import datetime as _dt
-from dataclasses import replace
 from typing import Optional
 
 from pyspark.sql import Column, functions as F, types as T
@@ -34,7 +33,8 @@ VIOLATION_ARRAY_DDL = f"array<{VIOLATION_STRUCT_DDL}>"
 
 
 def empty_violations() -> Column:
-    return F.array().cast(VIOLATION_ARRAY_DDL)
+    # one parsed expression is one JVM round trip; array().cast() is more
+    return F.expr(f"cast(array() as {VIOLATION_ARRAY_DDL})")
 
 
 def make_violation(rule_id: str, field: Optional[str], location,
@@ -51,16 +51,12 @@ def make_violation(rule_id: str, field: Optional[str], location,
             kv += [F.lit(k), vc.cast("string")]
         pmap = F.create_map(*kv)
     else:
-        pmap = F.lit(None).cast("map<string,string>")
-    return F.struct(
-        F.lit(rule_id).alias("rule_id"),
-        (F.lit(field) if field is not None
-         else F.lit(None)).cast("string").alias("field"),
-        loc.cast("string").alias("location"),
-        F.lit(code).alias("code"),
-        F.lit(message).cast("string").alias("message"),
-        pmap.alias("params"),
-    )
+        pmap = F.lit(None)
+    # one struct cast names and types the fields by position: each
+    # alias or cast is a round trip to the JVM, and a rule compiles
+    # one struct per violation flavor
+    return F.struct(F.lit(rule_id), F.lit(field), loc, F.lit(code),
+                    F.lit(message), pmap).cast(VIOLATION_STRUCT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -472,13 +468,22 @@ def _gate_expr(rule: Rule) -> Optional[Column]:
     return F.expr(gate) if isinstance(gate, str) else gate
 
 
-def pass_expr(rule: Rule, schema: T.StructType,
-              run_ts: _dt.datetime, df=None,
-              prefilter: bool = False) -> Column:
-    """Compact boolean pass-predicate for a rule: True ⇔ the row has no
-    violation. NULL results mean "not proven ok" — callers must coalesce
-    to False (a NULL predicate outcome is a violation, matching
-    compile_rule).
+def gated(rule: Rule, expr: Column, otherwise: Column) -> Column:
+    """``expr`` where the rule's variant gate holds, ``otherwise`` on
+    rows of another variant (or NULL gate); ``expr`` when ungated."""
+    g = _gate_expr(rule)
+    return expr if g is None else F.when(g, expr).otherwise(otherwise)
+
+
+def pass_expr(rule: Rule, ok: Column, prefilter: bool = False) -> Column:
+    """Compact boolean pass-predicate for a column rule: True ⇔ the row
+    has no violation. ``ok`` is the rule's validity Column from
+    ``ok_and_params`` — the same tree ``compile_rule`` wraps in its
+    violation struct, built once by the engine. NULL results mean "not
+    proven ok" — callers must coalesce to False (a NULL predicate
+    outcome is a violation, matching compile_rule). iter/map_values
+    rules pass iff their violation array is empty, and schema rules
+    use ``schema_pass_expr``.
 
     This is the cheap phase-1 expression of the two-phase evaluation:
     the engine filters rows on the conjunction of pass_exprs (small
@@ -501,29 +506,20 @@ def pass_expr(rule: Rule, schema: T.StructType,
     whole table into phase 2), and an `ip any` rule over v6-heavy data
     would pay the same — both stay exact in phase 1.
     """
-    g = _gate_expr(rule)
-    if g is not None:
-        ungated = replace(rule, params={
-            k: v for k, v in rule.params.items() if k != "_gate"})
-        return F.when(g, pass_expr(ungated, schema, run_ts, df,
-                                   prefilter)) \
-                .otherwise(F.lit(True))
-    if rule.kind == "schema":
-        pred = rule.params["predicate"]
-        return F.expr(pred) if isinstance(pred, str) else pred(df)
-    if rule.kind == "iter":
-        return F.size(_compile_iter(rule, schema, run_ts)) == 0
-    if rule.kind == "map_values":
-        return F.size(_compile_map_values(rule, schema, run_ts)) == 0
     c = F.col(rule.column)
-    dtype = resolve_type(schema, rule.column)
     if prefilter and rule.kind in ("email", "url"):
         ok = _fast_path_ok(rule, c)
-    else:
-        ok, _ = ok_and_params(rule, c, dtype, run_ts, schema)
-    if rule.kind == "required":
-        return ok
-    return c.isNull() | ok
+    if rule.kind != "required":
+        ok = c.isNull() | ok
+    return gated(rule, ok, F.lit(True))
+
+
+def schema_pass_expr(rule: Rule, df) -> Column:
+    """Pass predicate of a whole-row schema rule on ``df`` (see
+    ``pass_expr``)."""
+    pred = rule.params["predicate"]
+    ok = F.expr(pred) if isinstance(pred, str) else pred(df)
+    return gated(rule, ok, F.lit(True))
 
 
 def _fast_path_ok(rule: Rule, c: Column) -> Column:
@@ -536,19 +532,19 @@ def _fast_path_ok(rule: Rule, c: Column) -> Column:
 
 
 def compile_rule(rule: Rule, schema: T.StructType,
-                 run_ts: _dt.datetime) -> Column:
+                 run_ts: _dt.datetime, ok_params) -> Column:
     """Compile one rule into an ``array<violation-struct>`` Column
-    (empty array ⇔ pass)."""
+    (empty array ⇔ pass). ``ok_params``: the rule's ``ok_and_params``
+    pair on its own column, shared with its pass predicate; None for
+    iter/map_values, which build one pair per element."""
     if rule.kind == "schema":
         raise ValueError("schema rules are compiled by the engine")
+    return gated(rule, _compile_ungated(rule, schema, run_ts, ok_params),
+                 empty_violations())
 
-    g = _gate_expr(rule)
-    if g is not None:
-        ungated = replace(rule, params={
-            k: v for k, v in rule.params.items() if k != "_gate"})
-        return F.when(g, compile_rule(ungated, schema, run_ts)) \
-                .otherwise(empty_violations())
 
+def _compile_ungated(rule: Rule, schema: T.StructType,
+                     run_ts: _dt.datetime, ok_params) -> Column:
     if rule.kind == "iter":
         return _compile_iter(rule, schema, run_ts)
     if rule.kind == "map_values":
@@ -559,8 +555,7 @@ def compile_rule(rule: Rule, schema: T.StructType,
         return _compile_time_string_target(rule, run_ts, schema)
 
     c = F.col(rule.column)
-    dtype = resolve_type(schema, rule.column)
-    ok, prm = ok_and_params(rule, c, dtype, run_ts, schema)
+    ok, prm = ok_params
 
     viol = make_violation(
         rule.rule_id, rule.display_name or rule.column.split(".")[-1],
@@ -734,10 +729,8 @@ def compile_schema_rule(rule: Rule, df) -> Column:
     one = F.array(viol).cast(VIOLATION_ARRAY_DDL)
     # a NULL predicate result counts as failure (unknown ⇒ not proven ok)
     out = F.when(ok, empty_violations()).otherwise(one)
-    # honor the variant gate in phase 2 exactly like pass_expr does in
-    # phase 1: a row of another variant that reached phase 2 by failing
-    # a DIFFERENT rule must not collect this variant's schema violation
-    g = _gate_expr(rule)
-    if g is not None:
-        out = F.when(g, out).otherwise(empty_violations())
-    return out
+    # honor the variant gate in phase 2 exactly like schema_pass_expr
+    # does in phase 1: a row of another variant that reached phase 2 by
+    # failing a DIFFERENT rule must not collect this variant's schema
+    # violation
+    return gated(rule, out, empty_violations())

@@ -20,7 +20,7 @@ import datetime as _dt
 from dataclasses import dataclass
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from . import compiler as C
 from .modifiers import apply_modifiers
@@ -156,6 +156,10 @@ class ValidationEngine:
         # release the shared cache before the first action — making
         # every union chunk re-run the full phase-1 scan.
         self._phase_caches: list = []
+        # compiled Column trees, keyed by rule and input schema: phase
+        # 1, the chunk probe, phase 2, with_valid_flag and
+        # coverage_report all read one build per rule (see _cached)
+        self._compiled: dict = {}
         import weakref
         weakref.finalize(self, _release_caches, self._phase_caches)
 
@@ -180,6 +184,70 @@ class ValidationEngine:
         return [c for c in C.rule_input_columns(rule)
                 if C.resolve_type(schema, c) is None]
 
+    # -- compile cache -------------------------------------------------------
+    def _cached(self, key: tuple, rule: Rule, build):
+        """Memo of ``build()`` under ``key``. The entry holds ``rule``,
+        so the ``id(rule)`` inside the key can't be reused while it is
+        cached. Entries live as long as the engine, one set per input
+        schema it has seen. Two threads missing the same key both
+        build, and either tree is correct."""
+        hit = self._compiled.get(key)
+        if hit is None:
+            hit = self._compiled[key] = (rule, build())
+        return hit[1]
+
+    def _ok_params(self, rule: Rule, schema):
+        """The (ok, params) pair of a column rule: phase 1's pass
+        predicate and phase 2's violation struct both read this one
+        build."""
+        return self._cached(
+            ("ok", id(rule), schema), rule,
+            lambda: C.ok_and_params(rule, F.col(rule.column),
+                                    C.resolve_type(schema, rule.column),
+                                    self.run_ts, schema))
+
+    def _rule_array(self, rule: Rule, schema) -> Column:
+        """Violation array of a non-schema rule, compiled once per
+        engine and input schema."""
+        def build():
+            miss = self._missing_inputs(rule, schema)
+            if miss:
+                return C.gated(rule, C.compile_missing_column(rule, miss[0]),
+                               C.empty_violations())
+            ok_params = (None if rule.kind in ("iter", "map_values")
+                         else self._ok_params(rule, schema))
+            return C.compile_rule(rule, schema, self.run_ts, ok_params)
+        return self._cached(("arr", id(rule), schema), rule, build)
+
+    def _rule_pass(self, rule: Rule, df: DataFrame,
+                   prefilter: bool) -> Column:
+        """Coalesced pass predicate of one rule (see ``_pass_all``),
+        a thin wrapper over the rule's cached trees. Schema-rule
+        predicates are rebuilt per call: their callable receives the
+        DataFrame."""
+        schema = df.schema
+        if self._missing_inputs(rule, schema):
+            # missing column ⇒ every (gate-matching) row fails
+            return C.gated(rule, F.lit(False), F.lit(True))
+        if rule.kind in ("iter", "map_values"):
+            # the array carries the gate
+            ok = F.size(self._rule_array(rule, schema)) == 0
+        elif rule.kind == "schema":
+            ok = C.schema_pass_expr(rule, df)
+        else:
+            ok = C.pass_expr(rule, self._ok_params(rule, schema)[0],
+                             prefilter)
+        return F.coalesce(ok, F.lit(False))
+
+    def _presence_ok(self, schema) -> Column:
+        """True ⇔ no presence rule fires on the row."""
+        def build():
+            arrays = [self._rule_array(r, schema)
+                      for r in self.ruleset.presence_rules]
+            return (F.size(F.flatten(F.array(*arrays))) == 0 if arrays
+                    else F.lit(True))
+        return self._cached(("presence_ok", schema), None, build)
+
     # -- violations --------------------------------------------------------
     def _pass_all(self, df: DataFrame, prefilter: bool = False):
         """Phase-1 predicate: True ⇔ row has NO violation. Compact
@@ -193,36 +261,17 @@ class ValidationEngine:
         under-approximation of pass, so phase 1 may over-capture rows
         that phase 2's exact expressions then clear; the Arrow UDF tier
         leaves the full-table scan entirely (compiler.pass_expr)."""
-        schema = df.schema
-
-        def p(rule):
-            if self._missing_inputs(rule, schema):
-                # missing column ⇒ every (gate-matching) row fails
-                g = C._gate_expr(rule)
-                if g is not None:
-                    return F.when(g, F.lit(False)).otherwise(F.lit(True))
-                return F.lit(False)
-            return F.coalesce(
-                C.pass_expr(rule, schema, self.run_ts, df,
-                            prefilter=prefilter), F.lit(False))
-
-        presence = self.ruleset.presence_rules
-        mains = self.ruleset.main_rules
-        presence_pass = None
-        for r in presence:
-            presence_pass = p(r) if presence_pass is None \
-                else (presence_pass & p(r))
-        main_pass = None
-        for r in mains:
-            main_pass = p(r) if main_pass is None else (main_pass & p(r))
-        if presence_pass is None and main_pass is None:
+        # presence failure gates main rules, but the row still fails, so
+        # the predicate is the plain conjunction over both stages
+        preds = [self._rule_pass(r, df, prefilter)
+                 for r in self.ruleset.presence_rules
+                 + self.ruleset.main_rules]
+        if not preds:
             return F.lit(True)
-        if presence_pass is None:
-            return main_pass
-        if main_pass is None:
-            return presence_pass
-        # presence failure gates main rules, but the row still fails
-        return presence_pass & main_pass
+        out = preds[0]
+        for p in preds[1:]:
+            out = out & p
+        return out
 
     def _violations_array(self, df: DataFrame, rules: list = None,
                           emit_presence: bool = True):
@@ -235,42 +284,20 @@ class ValidationEngine:
         schema = df.schema
         presence = self.ruleset.presence_rules
         pool = self.ruleset.main_rules if rules is None else rules
-        main = [r for r in pool if r.kind != "schema"]
-        schema_rules = [r for r in pool if r.kind == "schema"]
-
-        def compile_or_missing(r):
-            miss = self._missing_inputs(r, schema)
-            if miss:
-                arr = C.compile_missing_column(r, miss[0])
-                g = C._gate_expr(r)
-                if g is not None:
-                    arr = F.when(g, arr).otherwise(C.empty_violations())
-                return arr
-            return C.compile_rule(r, schema, self.run_ts)
-
-        presence_arrays = [compile_or_missing(r) for r in presence]
-        if presence_arrays:
-            presence_ok = F.size(F.flatten(F.array(*presence_arrays))) == 0
-        else:
-            presence_ok = F.lit(True)
-
-        arrays = list(presence_arrays) if emit_presence else []
-        for r in main:
-            arr = compile_or_missing(r)
-            if presence:
-                # presence failure suppresses later-stage rules for the row
-                arr = F.when(presence_ok, arr).otherwise(
-                    C.empty_violations())
-            arrays.append(arr)
         # schema (whole-row) rules run last, never short-circuited
         # (schema.rs:183-212)
-        for r in schema_rules:
-            arr = C.compile_schema_rule(r, df)
-            if presence:
-                arr = F.when(presence_ok, arr).otherwise(
-                    C.empty_violations())
-            arrays.append(arr)
-
+        arrays = ([self._rule_array(r, schema) for r in pool
+                   if r.kind != "schema"]
+                  + [C.compile_schema_rule(r, df) for r in pool
+                     if r.kind == "schema"])
+        if presence:
+            # presence failure suppresses later-stage rules for the row
+            ok = self._presence_ok(schema)
+            arrays = [F.when(ok, a).otherwise(C.empty_violations())
+                      for a in arrays]
+            if emit_presence:
+                arrays = [self._rule_array(r, schema)
+                          for r in presence] + arrays
         if not arrays:
             return C.empty_violations()
         return F.flatten(F.array(*arrays))
@@ -468,35 +495,22 @@ class ValidationEngine:
         """
         src = df if pre_normalized else self.normalize(df)
         schema = src.schema
-
-        def arr(r):
-            miss = self._missing_inputs(r, schema)
-            if miss:
-                a = C.compile_missing_column(r, miss[0])
-                g = C._gate_expr(r)
-                if g is not None:
-                    a = F.when(g, a).otherwise(C.empty_violations())
-                return a
-            return C.compile_rule(r, schema, self.run_ts)
-
         presence = self.ruleset.presence_rules
         mains = [r for r in self.ruleset.main_rules
                  if r.kind != "schema"]
         schema_rules = [r for r in self.ruleset.main_rules
                         if r.kind == "schema"]
-        presence_arrays = [arr(r) for r in presence]
-        presence_ok = (F.size(F.flatten(F.array(*presence_arrays))) == 0
-                       if presence_arrays else F.lit(True))
+        presence_ok = self._presence_ok(schema)
 
         entries, aggs = [], [F.count(F.lit(1)).alias("__n")]
         for i, r in enumerate(presence):
-            fired = F.size(presence_arrays[i]) > 0
+            fired = F.size(self._rule_array(r, schema)) > 0
             aggs.append(F.sum(fired.cast("long")).alias(f"__f_{i}"))
             entries.append((i, r))
         off = len(presence)
         for j, r in enumerate(mains + schema_rules):
             a = (C.compile_schema_rule(r, src) if r.kind == "schema"
-                 else arr(r))
+                 else self._rule_array(r, schema))
             fired = presence_ok & (F.size(a) > 0)
             aggs.append(
                 F.sum(fired.cast("long")).alias(f"__f_{off + j}"))
@@ -548,8 +562,3 @@ def validate(df: DataFrame, rules: list, key_cols: Sequence[str],
                  name=name)
     return ValidationEngine(rs, key_cols, run_ts=run_ts).validate(df)
 
-
-def rule_of(kind_or_rule, **kw) -> Rule:
-    if isinstance(kind_or_rule, Rule):
-        return kind_or_rule
-    return Rule(kind=kind_or_rule, **kw)

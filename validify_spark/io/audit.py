@@ -187,6 +187,16 @@ class AuditedValidationRun:
         return {f[:-5] for f in os.listdir(self._marker_dir)
                 if f.endswith(".json")}
 
+    def completed_markers(self) -> list:
+        """The marker payloads of every completed group, one per group
+        however often its batch was re-run (the audit log keeps one row
+        per attempt)."""
+        out = []
+        for pid in sorted(self.completed_partitions()):
+            with open(f"{self._marker_dir}/{pid}.json") as f:
+                out.append(json.load(f))
+        return out
+
     def planned_partitions(self, df: DataFrame) -> list:
         # hash-bucket plans need no input scan: every bucket id in
         # [0, n_buckets) is a group (empty buckets commit trivially) —
@@ -346,9 +356,12 @@ class AuditedValidationRun:
             })
         # audit rows first, markers last: a crash between the two re-runs
         # the batch (idempotent overwrite), never skips it
+        # an Arrow table becomes a LocalRelation; a list of tuples would
+        # go through a Python RDD and a Spark job of its own
+        import pyarrow as pa
         from .sources import write_table
-        adf = spark.createDataFrame(
-            [tuple(p.values()) for p in payloads], AUDIT_SCHEMA)
+        adf = spark.createDataFrame(pa.Table.from_pylist(payloads),
+                                    AUDIT_SCHEMA)
         write_table(adf, self.audit_table or self.audit_path,
                     mode="append")
         for p in payloads:

@@ -70,7 +70,7 @@ def main(argv=None) -> int:
                                      standard_conversation_rules,
                                      standard_turns_ruleset)
     from validify_spark.engine import ValidationEngine
-    from validify_spark.io import AuditedValidationRun, read_audit_log
+    from validify_spark.io import AuditedValidationRun
     from validify_spark.io.sources import read_table
 
     # spark-submit provides master/executors via CLI/conf — build on
@@ -105,22 +105,22 @@ def main(argv=None) -> int:
                                conv_agg_rules=conv_rules)
     done = run.run(turns)
 
+    # totals from the markers, one per completed group: a batch re-run
+    # after a crash between its audit append and its markers leaves two
+    # audit rows for a group but still one marker
+    markers = run.completed_markers()
     summary = {
         "run_id": args.run_id,
         "partitions_validated_this_run": len(done),
-        "partitions_total": len(run.completed_partitions()),
+        "partitions_total": len(markers),
+        "rows": sum(m["n_rows"] for m in markers),
+        "violations": sum(m["n_violations"] for m in markers),
+        "groups_passed": sum(bool(m["passed"]) for m in markers),
+        "groups": len(markers),
     }
-    audit = read_audit_log(spark, args.out, args.run_id)
-    from pyspark.sql import functions as F
-    tot = audit.agg(F.sum("n_rows").alias("rows"),
-                    F.sum("n_violations").alias("violations"),
-                    F.sum(F.col("passed").cast("int")).alias("passed"),
-                    F.count("*").alias("groups")).collect()[0]
-    summary.update(rows=tot["rows"], violations=tot["violations"],
-                   groups_passed=tot["passed"], groups=tot["groups"])
     if args.conv_checks:
-        summary["conv_violations"] = audit.agg(
-            F.sum("n_conv_violations")).collect()[0][0]
+        summary["conv_violations"] = sum(
+            m.get("n_conv_violations", 0) for m in markers)
 
     if args.checks == "all":
         summary["dup_keys"] = uniqueness_violations(

@@ -79,29 +79,39 @@ def stream_ordering_violations(stream_df: DataFrame,
         if frames:
             pdf = (pd.concat(frames, ignore_index=True)
                    if len(frames) > 1 else frames[0])
-            pdf = pdf.sort_values([idx_col, ts_col],
+            # (idx, ts) ascending with NULLs first, as the batch check
+            pdf = pdf.sort_values([idx_col, "__ts_null", "__ts_us"],
+                                  ascending=[True, False, True],
                                   na_position="first", kind="stable")
-            for idx, ts in zip(pdf[idx_col], pdf[ts_col]):
+            for idx, ts_null, ts_us in zip(pdf[idx_col], pdf["__ts_null"],
+                                           pdf["__ts_us"]):
                 idx_ok = not pd.isna(idx)
-                ts_ok = not pd.isna(ts)
+                ts_ok = not ts_null
                 if idx_ok and has_idx:
                     if int(idx) == last_idx:
                         emit(int(idx), "dup_turn_idx")
                     elif int(idx) > last_idx + 1:
                         emit(int(idx), "turn_idx_gap")
-                if ts_ok and has_ts and ts.value // 1000 < last_ts_us:
+                if ts_ok and has_ts and ts_us < last_ts_us:
                     emit(int(idx) if idx_ok else None,
                          "ts_out_of_order")
                 has_idx = idx_ok
                 last_idx = int(idx) if idx_ok else 0
                 has_ts = ts_ok
-                last_ts_us = int(ts.value // 1000) if ts_ok else 0
+                last_ts_us = int(ts_us)
         state.update((last_idx, last_ts_us, has_idx, has_ts))
         yield pd.DataFrame({conv_col: convs, idx_col: idxs,
                             "code": codes})
 
+    # ts travels as epoch microseconds plus a NULL flag: pandas'
+    # nanosecond timestamps cannot hold years past 2262, and a nullable
+    # long would arrive as float64, inexact above 2^53 µs
+    ts = F.col(ts_col)
     return (stream_df
-            .select(conv_col, idx_col, ts_col)
+            .select(conv_col, idx_col,
+                    F.coalesce(F.unix_micros(ts), F.lit(0))
+                    .alias("__ts_us"),
+                    ts.isNull().alias("__ts_null"))
             .groupBy(conv_col)
             .applyInPandasWithState(
                 fn, out_schema, state_schema, "append",
